@@ -405,15 +405,15 @@ def q10_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q11_soundex_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: reference soundex as blocking key + census (A1/A7)."""
-    from name_matching_spark.functions.udfs import soundex_udf, standardize_udf
-    from name_matching_spark.functions.udfs import parse_name_udf
+    from name_matching_spark.functions.phonetic import soundex_key
+    from name_matching_spark.functions.udfs import parse_name_udf, standardize_udf
 
     person = _person_df(spark, sf_dir)
     parsed = person.withColumn(
         "_p", parse_name_udf(F.col("first_name"), F.col("middle_name_last_name"))
     )
     return (
-        parsed.select(soundex_udf(standardize_udf(F.col("_p.last_name"))).alias("sdx_last"))
+        parsed.select(soundex_key(standardize_udf(F.col("_p.last_name"))).alias("sdx_last"))
         .groupBy("sdx_last")
         .agg(F.count("*").alias("n_records"))
     )

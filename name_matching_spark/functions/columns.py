@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from name_matching_spark.functions.udfs import soundex_udf
+from name_matching_spark.functions.phonetic import soundex_key
 
 __all__ = [
     "strip_name_prefixes",
@@ -83,7 +83,7 @@ def token_set_jaccard(c1: Column, c2: Column) -> Column:
 
 def soundex_equal(c1: Column, c2: Column) -> Column:
     """F6: 1.0 iff reference soundex codes match (``src/matcher.py:434-450``)."""
-    return F.when(soundex_udf(c1) == soundex_udf(c2), 1.0).otherwise(0.0)
+    return F.when(soundex_key(c1) == soundex_key(c2), 1.0).otherwise(0.0)
 
 
 def date_tolerance_score_ppm(d1: Column, d2: Column) -> Column:

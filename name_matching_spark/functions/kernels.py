@@ -29,7 +29,6 @@ __all__ = [
     "batch_dl_distance",
     "batch_dl_similarity",
     "batch_monge_elkan",
-    "batch_soundex",
     "batch_standardize",
     "batch_parse_middle_last",
     "batch_extract_full_name",
@@ -540,38 +539,6 @@ def batch_simhash(texts, bits: int = 64) -> np.ndarray:
 
 
 _simhash_md5_memo: dict[str, np.uint64] = {}
-
-
-_SOUNDEX_TABLE = str.maketrans("BFPVCGJKQSXZDTLMNR", "111122222222334556", "AEIOUHWY")
-
-
-def batch_soundex(s: pd.Series) -> pd.Series:
-    """Vectorized reference soundex (``src/matcher.py:322-431``; see
-    ``core.similarity.soundex`` for the semantics contract)."""
-    s = s.fillna("").astype(str)
-    up = s.str.upper()
-    first_raw = up.str.slice(0, 1)
-    alpha = up.str.replace(r"[^A-Z]", "", regex=True)
-    first = alpha.str.slice(0, 1)
-    digits = alpha.str.slice(1).str.translate(_SOUNDEX_TABLE)
-    collapsed = digits.str.replace(r"(.)\1+", r"\1", regex=True)
-    code = (first + collapsed + "000").str.slice(0, 4)
-
-    first_raw_is_alpha = first_raw.between("A", "Z") & (first_raw != "")
-    result = np.select(
-        [
-            s == "",
-            (alpha == "") & first_raw_is_alpha,
-            alpha == "",
-        ],
-        [
-            "0000",
-            (first_raw + "000").str.slice(0, 4),
-            "0000",
-        ],
-        default=code,
-    )
-    return pd.Series(result, index=s.index, dtype=object)
 
 
 @lru_cache(maxsize=1)

@@ -19,6 +19,9 @@ KNIGHT/NIGHT, PHILIP/FILIP, CATHERINE/KATHRYN — pinned in
 tests/test_column_helpers.py). Scale shape: pure JVM string expressions
 inside whole-stage codegen — no UDF, no shuffle; at 100 TB this is a
 map-only key projection exactly like the soundex path.
+
+:func:`soundex_key` is the reference soundex itself in the same shape,
+bit-identical to the scalar ``core.similarity.soundex``.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ __all__ = [
     "nysiis_key",
     "nysiis_sql",
     "NYSIIS_MAX_LEN",
+    "soundex_key",
 ]
 
 MAX_CODE_LEN = 8
@@ -119,6 +123,32 @@ def metaphone_key(col: Column, max_len: int = MAX_CODE_LEN) -> Column:
     for ch in _CODE_ALPHABET:
         k = F.regexp_replace(k, f"{ch}{{2,}}", ch)
     return F.substring(k, 1, max_len)
+
+
+# Reference soundex classes (``core.similarity._SOUNDEX_TABLE``): every
+# consonant maps to its digit, and F.translate deletes the trailing
+# AEIOUHWY because they have no replacement character.
+_SOUNDEX_FROM = "BFPVCGJKQSXZDTLMNR" + "AEIOUHWY"
+_SOUNDEX_TO = "111122222222334556"
+
+
+def soundex_key(col: Column) -> Column:
+    """Reference soundex (``core.similarity.soundex``, the oracle it must
+    equal bit for bit) as a pure column expression.
+
+    Pipeline: uppercase -> strip non-letters -> keep the first letter ->
+    digit-code the rest, dropping vowels -> collapse runs of one digit ->
+    pad to 4. A vowel between two equal codes does not reset the collapse
+    (Tymczak -> T520), and the first letter never suppresses the first
+    digit (Pfister -> P123), because vowels are deleted before collapsing
+    and the first letter is not coded. NULL, empty and letter-less input ->
+    ``"0000"``.
+    """
+    alpha = F.regexp_replace(F.upper(F.coalesce(col, F.lit(""))), "[^A-Z]", "")
+    digits = F.translate(F.substring(alpha, 2, 2147483647), _SOUNDEX_FROM, _SOUNDEX_TO)
+    collapsed = F.regexp_replace(digits, r"(.)\1+", "$1")
+    code = F.substring(F.concat(F.substring(alpha, 1, 1), collapsed, F.lit("000")), 1, 4)
+    return F.when(alpha == "", F.lit("0000")).otherwise(code)
 
 
 def _sql_repl(repl: str) -> str:

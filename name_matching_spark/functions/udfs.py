@@ -25,10 +25,10 @@ __all__ = [
     "dl_similarity_udf",
     "dl_distance_udf",
     "sw_similarity_udf",
-    "soundex_udf",
     "standardize_udf",
     "parse_name_udf",
     "parse_full_name_udf",
+    "make_normalize_udf",
     "make_component_scores_udf",
     "make_component_scores_dict_udf",
     "COMPONENT_SCORES_SCHEMA",
@@ -76,11 +76,6 @@ def dl_distance_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def soundex_udf(s: pd.Series) -> pd.Series:
-    return K.batch_soundex(s)
-
-
-@pandas_udf(StringType())
 def standardize_udf(s: pd.Series) -> pd.Series:
     return K.batch_standardize(s)
 
@@ -108,6 +103,50 @@ def parse_full_name_udf(full_name: pd.Series) -> pd.DataFrame:
     the N6 operator: normalizes a one-column name table without a
     pre-split (first, middle+last) shape."""
     return K.batch_extract_full_name(full_name)
+
+
+def make_normalize_udf(geo_fields: list[str]):
+    """Build the FUSED record-normalize UDF: parse + standardize every name
+    component and every geo field in one Arrow round trip.
+
+    Same kernels as ``standardize_udf(parse_name_udf(...).<part>)`` per
+    field, so the output is identical to that chain; the chain costs two
+    Python nodes per record (every Python node in a pipelined stage runs
+    its own worker per task), this costs one.
+
+    The UDF takes ``(first_name, middle_name_last_name)`` plus, when
+    ``geo_fields`` is non-empty, ONE struct of the geo columns in
+    ``geo_fields`` order (``pandas_udf`` rejects ``*args``). It returns a
+    struct ``first_std, middle_std, last_std, <geo>_std..``.
+    """
+    schema = StructType(
+        [StructField(c, StringType()) for c in ("first_std", "middle_std", "last_std")]
+        + [StructField(f"{g}_std", StringType()) for g in geo_fields]
+    )
+
+    def _normalize(first: pd.Series, middle_last: pd.Series, geo=None) -> pd.DataFrame:
+        parsed = K.batch_parse_middle_last(first, middle_last)
+        out = {
+            "first_std": K.batch_standardize(parsed["first_name"]),
+            "middle_std": K.batch_standardize(parsed["middle_name"]),
+            "last_std": K.batch_standardize(parsed["last_name"]),
+        }
+        for i, g in enumerate(geo_fields):
+            out[f"{g}_std"] = K.batch_standardize(geo.iloc[:, i])
+        return pd.DataFrame(out, index=first.index)
+
+    if geo_fields:
+        @pandas_udf(schema)
+        def normalize_record(
+            first: pd.Series, middle_last: pd.Series, geo: pd.DataFrame
+        ) -> pd.DataFrame:
+            return _normalize(first, middle_last, geo)
+    else:
+        @pandas_udf(schema)
+        def normalize_record(first: pd.Series, middle_last: pd.Series) -> pd.DataFrame:
+            return _normalize(first, middle_last)
+
+    return normalize_record
 
 
 COMPONENT_SCORES_SCHEMA = StructType(

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from name_matching_spark.functions.udfs import soundex_udf
+from name_matching_spark.functions.phonetic import metaphone_key, nysiis_key, soundex_key
 
 __all__ = [
     "BlockingConfig",
@@ -69,23 +69,19 @@ def blocking_key_column(kind: str) -> Column:
     if kind == "phonetic":
         first_char = F.upper(F.substring(F.col("first_std"), 1, 1))
         first_char = F.when(first_char == "", "UNKNOWN").otherwise(first_char)
-        return F.concat_ws("|", first_char, soundex_udf(F.col("last_std")))
+        return F.concat_ws("|", first_char, soundex_key(F.col("last_std")))
     if kind == "soundex_full":
         return F.concat_ws(
-            "|", soundex_udf(F.col("first_std")), soundex_udf(F.col("last_std"))
+            "|", soundex_key(F.col("first_std")), soundex_key(F.col("last_std"))
         )
     if kind == "token_sorted":
         return F.when(F.col("sorted_full") == "", "UNKNOWN").otherwise(F.col("sorted_full"))
     if kind == "metaphone":
-        from name_matching_spark.functions.phonetic import metaphone_key
-
         first_char = F.upper(F.substring(F.col("first_std"), 1, 1))
         first_char = F.when(first_char == "", "UNKNOWN").otherwise(first_char)
         mp = metaphone_key(F.col("last_std"))
         return F.concat_ws("|", first_char, F.when(mp == "", "0000").otherwise(mp))
     if kind == "nysiis":
-        from name_matching_spark.functions.phonetic import nysiis_key
-
         first_char = F.upper(F.substring(F.col("first_std"), 1, 1))
         first_char = F.when(first_char == "", "UNKNOWN").otherwise(first_char)
         ny = nysiis_key(F.col("last_std"))

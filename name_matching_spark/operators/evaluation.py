@@ -263,9 +263,9 @@ def roc_auc(
     # ``weight_col``: the input is already a census (one row per distinct
     # (score, label) with its pair count) — sum weights instead of rows.
     # Integer-exact either way, so the output is bit-identical.
-    w = F.col(weight_col).cast("bigint") if weight_col else F.lit(1).cast("bigint")
+    weight = F.col(weight_col).cast("bigint") if weight_col else F.lit(1).cast("bigint")
     census = (
-        pairs.select(F.col(label_col).alias("pos_flag"), score_col, w.alias("_w"))
+        pairs.select(F.col(label_col).alias("pos_flag"), score_col, weight.alias("_w"))
         .groupBy(score_col)
         .agg(
             F.sum("_w").alias("cnt"),

@@ -13,7 +13,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from name_matching_spark.functions.udfs import parse_name_udf, standardize_udf
+from name_matching_spark.functions.udfs import make_normalize_udf
 
 __all__ = ["LinkageSchema", "normalize_records", "standardize_date"]
 
@@ -57,21 +57,26 @@ def normalize_records(df: DataFrame, schema: LinkageSchema | None = None) -> Dat
     """
     schema = schema or LinkageSchema()
 
-    parsed = df.withColumn(
-        "_parsed",
-        parse_name_udf(F.col(schema.first_name), F.col(schema.middle_name_last_name)),
+    # one Python node per record: parse and every standardize run in one
+    # fused Arrow UDF, the rest of the record is JVM expressions
+    geo = (
+        [F.struct(*[F.col(g).alias(f"g{i}") for i, g in enumerate(schema.geo_fields)])]
+        if schema.geo_fields
+        else []
     )
-    out = parsed.select(
+    normalized = make_normalize_udf(schema.geo_fields)(
+        F.col(schema.first_name), F.col(schema.middle_name_last_name), *geo
+    )
+    norm = F.col("_norm")
+    out = df.withColumn("_norm", normalized).select(
         F.col(schema.id_col).alias("record_id"),
-        standardize_udf(F.col("_parsed.first_name")).alias("first_std"),
-        standardize_udf(F.col("_parsed.middle_name")).alias("middle_std"),
-        standardize_udf(F.col("_parsed.last_name")).alias("last_std"),
+        *[norm.getField(c).alias(c) for c in ("first_std", "middle_std", "last_std")],
         *(
             [standardize_date(F.col(schema.birthdate)).alias("birthdate_std")]
             if schema.birthdate
             else []
         ),
-        *[standardize_udf(F.col(g)).alias(f"{g}_std") for g in schema.geo_fields],
+        *[norm.getField(f"{g}_std").alias(f"{g}_std") for g in schema.geo_fields],
     )
 
     # full name = " ".join(filter(None, [first, middle, last])) — concat_ws

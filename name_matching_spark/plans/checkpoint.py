@@ -27,7 +27,11 @@ from name_matching_spark.operators.score_pairs import (
     score_pairs,
     scoring_struct_cols,
 )
-from name_matching_spark.plans.linkage import prepare_linkage_frame
+from name_matching_spark.plans.linkage import (
+    _build_class_encoding,
+    prepare_linkage_frame,
+    validate_linkage_config,
+)
 
 __all__ = ["CheckpointedLinkage"]
 
@@ -114,37 +118,40 @@ class CheckpointedLinkage:
 
     # -- execution ----------------------------------------------------------
     def run(self, df: DataFrame, keep_non_match: bool = False) -> list[int]:
-        """Process all incomplete ranges; returns the ranges executed now."""
-        from name_matching_spark.plans.linkage import _build_class_encoding
+        """Process all incomplete ranges; returns the ranges executed now.
 
-        work = prepare_linkage_frame(df, self.schema, self.matcher)
-        payload_cols = scoring_struct_cols(self.matcher)
-        class_dict = None
-        if self.dict_encode is None or self.dict_encode:
-            enc = _build_class_encoding(
-                [work], self.matcher, self.dict_max_classes,
-                required=bool(self.dict_encode),
-            )
-            if enc is not None:
-                (work,), class_dict = enc
-                payload_cols = ["class_id"] + (
-                    ["birthdate_std"] if self.matcher.use_birthdate else []
-                )
+        The manifests are read first: a resume with nothing left to do
+        returns before any plan is built, so it launches no Spark job.
+        """
+        validate_linkage_config(self.schema, self.matcher)
+        done = self.completed_ranges()
+        todo = [i for i in range(self.num_ranges) if i not in done]
+        if not todo:
+            return []
 
-        # normalize once, reuse for every range (per-range jobs only differ
-        # in the range predicate, pushed below the pair join)
-        work = work.persist()
+        # normalize once: the dictionary probe and every range read this
+        # frame (per-range jobs only differ in the range predicate, pushed
+        # below the pair join)
+        normalized = prepare_linkage_frame(df, self.schema, self.matcher).persist()
         try:
-            done = self.completed_ranges()
-            executed = []
-            for i in range(self.num_ranges):
-                if i in done:
-                    continue
+            work = normalized
+            payload_cols = scoring_struct_cols(self.matcher)
+            class_dict = None
+            if self.dict_encode is None or self.dict_encode:
+                enc = _build_class_encoding(
+                    [work], self.matcher, self.dict_max_classes,
+                    required=bool(self.dict_encode),
+                )
+                if enc is not None:
+                    (work,), class_dict = enc
+                    payload_cols = ["class_id"] + (
+                        ["birthdate_std"] if self.matcher.use_birthdate else []
+                    )
+            for i in todo:
                 self._run_range(work, payload_cols, i, keep_non_match, class_dict)
-                executed.append(i)
-            return executed
+            return todo
         finally:
-            work.unpersist()
+            normalized.unpersist()
 
     def _run_range(
         self,

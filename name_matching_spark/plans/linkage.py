@@ -29,20 +29,20 @@ from name_matching_spark.operators.score_pairs import (
     top_k_per_record,
 )
 
-__all__ = ["dedup_table", "link_tables", "prepare_linkage_frame", "assign_to_anchors"]
+__all__ = [
+    "dedup_table",
+    "link_tables",
+    "prepare_linkage_frame",
+    "validate_linkage_config",
+    "assign_to_anchors",
+]
 
 
-def prepare_linkage_frame(
-    df: DataFrame, schema: LinkageSchema | None, matcher: MatcherConfig
-) -> DataFrame:
-    """normalize + project to (record_id, scoring payload, blocking inputs).
-
-    The schema (which input columns exist) and the matcher (which fields are
-    scored) encode overlapping facts — validate them against each other up
-    front so misalignment fails with a clear message instead of an
-    UNRESOLVED_COLUMN AnalysisException deep inside the pair join.
-    """
-    schema = schema or LinkageSchema()
+def validate_linkage_config(schema: LinkageSchema, matcher: MatcherConfig) -> None:
+    """The schema (which input columns exist) and the matcher (which fields
+    are scored) encode overlapping facts — validate them against each other
+    up front so misalignment fails with a clear message instead of an
+    UNRESOLVED_COLUMN AnalysisException deep inside the pair join."""
     if matcher.use_birthdate and not schema.birthdate:
         raise ValueError(
             "matcher.use_birthdate=True but schema.birthdate is None — "
@@ -54,10 +54,18 @@ def prepare_linkage_frame(
             f"matcher.geo_fields {missing_geo} not in schema.geo_fields "
             f"{schema.geo_fields} — align the two configs"
         )
+
+
+def prepare_linkage_frame(
+    df: DataFrame, schema: LinkageSchema | None, matcher: MatcherConfig
+) -> DataFrame:
+    """normalize + project to (record_id, scoring payload, blocking inputs),
+    after :func:`validate_linkage_config`."""
+    schema = schema or LinkageSchema()
+    validate_linkage_config(schema, matcher)
     # a small/single-file source arrives as one partition and the normalize
-    # UDF chain (parse + per-field standardize + soundex downstream) would
-    # run serially on one core — spread BEFORE the UDFs, not just before
-    # the pair join (profiled: 5s -> <1s for the sf0.1 normalize pass)
+    # UDF would run serially on one core — spread BEFORE the UDF, not just
+    # before the pair join (profiled: 5s -> <1s for the sf0.1 normalize pass)
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
@@ -144,6 +152,7 @@ def _build_class_encoding(
     partitionings.
     """
     import numpy as np
+    import pandas as pd
 
     fields = _payload_fields(matcher)
     union = works[0]
@@ -172,8 +181,10 @@ def _build_class_encoding(
         c: np.array([r[c] for r in rows], dtype=object) for c in fields
     }
     spark = works[0].sparkSession
+    # from pandas, the mapping takes the Arrow path (a list of tuples would
+    # be parallelized through Python workers)
     mapping = spark.createDataFrame(
-        [(i, *[r[c] for c in fields]) for i, r in enumerate(rows)],
+        pd.DataFrame({"class_id": np.arange(len(rows), dtype=np.int64), **arrays}),
         schema="class_id long, " + ", ".join(f"{c} string" for c in fields),
     )
     ck = F.md5(F.to_json(F.struct(*[F.col(c) for c in fields])))

@@ -28,8 +28,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow batches feed the vectorized kernels; 10k rows/batch keeps the
-        # DL DP tensors comfortably inside the kernel cell budget
+        # Arrow batches feed the vectorized kernels; the DL kernel chunks
+        # each batch so its DP tensors stay inside the kernel cell budget
+        # at any batch size (64k rows below)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 64k-row Arrow batches: fewer Python round trips AND better
         # batch-local pair memoization (more duplicate pairs per batch) —

@@ -1,4 +1,4 @@
-"""Column-expression helpers == scalar oracle (affixes, Jaccard, soundex)."""
+"""Column-expression helpers == scalar oracle (affixes, Jaccard, soundex key)."""
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -8,6 +8,7 @@ from name_matching_spark.core import (
     jaccard_similarity,
     remove_name_prefixes,
     remove_name_suffixes,
+    soundex,
     soundex_similarity,
 )
 from name_matching_spark.functions.columns import (
@@ -16,6 +17,7 @@ from name_matching_spark.functions.columns import (
     strip_name_suffixes,
     token_set_jaccard,
 )
+from name_matching_spark.functions.phonetic import soundex_key
 
 AFFIX_PIECES = [
     "Mr", "mr.", "MRS", "Dr.", "Atty", "Juan", "Cruz", "Santos,", "Jr",
@@ -97,6 +99,34 @@ def test_token_set_jaccard(spark):
     rows = df.select("a", "b", token_set_jaccard(F.col("a"), F.col("b")).alias("j")).collect()
     for r in rows:
         assert r["j"] == pytest.approx(jaccard_similarity(r["a"], r["b"])), (r["a"], r["b"])
+
+
+# letters whose uppercase is (or contains) ASCII (ß -> SS, ı -> I, ſ -> S),
+# accented and non-Latin letters that strip away, a titlecase digraph,
+# digits and punctuation
+SOUNDEX_TRICKY = "ßıſéжǅ019 -'aeiouhwyBFPVCGJKQSXZDTLMNR"
+SOUNDEX_EDGES = ["", None, "0123", "ß", "ı", "ſ", "é", "ж", "ǅ", "-a", "Tymczak"]
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(
+    st.one_of(st.text(max_size=12), st.text(alphabet=SOUNDEX_TRICKY, max_size=12), st.none()),
+    min_size=1, max_size=30,
+))
+def test_soundex_key_matches_oracle(spark, strs):
+    """The JVM blocking key equals the scalar soundex oracle bit for bit
+    (NULL keys like the empty string)."""
+    strs = strs + SOUNDEX_EDGES
+    df = spark.createDataFrame([(s,) for s in strs], "s string")
+    got = [r["k"] for r in df.select(soundex_key(F.col("s")).alias("k")).collect()]
+    assert got == [soundex(s or "") for s in strs]
+
+
+def test_soundex_key_golden(spark):
+    strs = ["Robert", "Tymczak", "Pfister", "Dela Cruz", "", "123", "A"]
+    df = spark.createDataFrame([(s,) for s in strs], "s string")
+    got = [r["k"] for r in df.select(soundex_key(F.col("s")).alias("k")).collect()]
+    assert got == ["R163", "T520", "P123", "D426", "0000", "0000", "A000"]
 
 
 def test_soundex_equal(spark):

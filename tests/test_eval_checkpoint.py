@@ -141,6 +141,46 @@ def test_checkpoint_config_mismatch_refuses(spark, tmp_path):
     assert CheckpointedLinkage(out, num_ranges=2, schema=SCHEMA).run(df) == []
 
 
+def test_checkpoint_resume_of_complete_dir_launches_no_job(spark, tmp_path):
+    """A resume with every range complete reads the manifests and returns
+    before building a plan: no normalize pass, no dictionary probe."""
+    df = spark.createDataFrame(person_records(n_entities=20, seed=43).drop(columns=["entity_id"]))
+    runner = CheckpointedLinkage(str(tmp_path / "ckpt_done"), num_ranges=2, schema=SCHEMA)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("ckpt-first-run", "first run")
+        assert runner.run(df) == [0, 1]
+        sc.setJobGroup("ckpt-resume", "resume over a complete dir")
+        assert runner.run(df) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("ckpt-first-run")  # the count sees jobs
+    assert tracker.getJobIdsForGroup("ckpt-resume") == []
+
+
+@pytest.mark.parametrize("dict_encode", [True, False])
+def test_checkpoint_run_unpersists_what_it_persisted(spark, tmp_path, monkeypatch, dict_encode):
+    """run() persists the normalized frame once and releases that same
+    frame, also when dictionary encoding replaces the work frame."""
+    df = spark.createDataFrame(person_records(n_entities=20, seed=47).drop(columns=["entity_id"]))
+    persisted = []
+    persist = type(df).persist
+
+    def recording_persist(self, *a, **kw):
+        persisted.append(self)
+        return persist(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "persist", recording_persist)
+    CheckpointedLinkage(
+        str(tmp_path / "ckpt_persist"), num_ranges=2, schema=SCHEMA, dict_encode=dict_encode
+    ).run(df)
+    assert len(persisted) == 1
+    level = persisted[0].storageLevel
+    assert not (level.useMemory or level.useDisk), level
+
+
 def test_threshold_sweep_matches_single_threshold_counts(spark):
     """The sweep at one threshold equals confusion_counts at that threshold;
     ppm metrics are the exact integer forms of P/R/F1."""

@@ -12,7 +12,6 @@ from name_matching_spark.core import (
     monge_elkan_similarity,
     damerau_levenshtein_similarity,
     parse_name,
-    soundex,
     standardize_name,
 )
 from name_matching_spark.functions.kernels import (
@@ -22,7 +21,6 @@ from name_matching_spark.functions.kernels import (
     batch_jaro_winkler,
     batch_monge_elkan,
     batch_parse_middle_last,
-    batch_soundex,
     batch_standardize,
 )
 
@@ -111,19 +109,6 @@ def test_batch_monge_elkan_matches_oracle(rows):
         [monge_elkan_similarity(a, b, damerau_levenshtein_similarity) for a, b in rows]
     )
     np.testing.assert_allclose(got_dl, want_dl, rtol=0, atol=1e-12)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(st.text(max_size=12), min_size=1, max_size=20))
-def test_batch_soundex_matches_oracle(strs):
-    got = batch_soundex(pd.Series(strs, dtype=object))
-    want = [soundex(s) for s in strs]
-    assert list(got) == want
-
-
-def test_batch_soundex_golden():
-    s = pd.Series(["Robert", "Tymczak", "Pfister", "Dela Cruz", "", "123", "A"])
-    assert list(batch_soundex(s)) == ["R163", "T520", "P123", "D426", "0000", "0000", "A000"]
 
 
 @settings(max_examples=300, deadline=None)

@@ -7,8 +7,12 @@ import re
 
 from pyspark.sql import functions as F
 
+import pytest
+
 from name_matching_spark.datagen import person_records
-from name_matching_spark.operators.normalize import LinkageSchema
+from name_matching_spark.functions.udfs import parse_name_udf, standardize_udf
+from name_matching_spark.operators.blocking import blocking_key_column
+from name_matching_spark.operators.normalize import LinkageSchema, normalize_records
 from name_matching_spark.plans.linkage import dedup_table
 
 
@@ -46,6 +50,68 @@ def test_normalize_not_recomputed_per_join_arm(spark):
     # the only scans below the checkpoint are ExistingRDD reads
     assert _node_count(plan, "Scan parquet") == 0
     assert _node_count(plan, "ArrowEvalPython") <= 1
+
+
+@pytest.mark.parametrize("kind", ["phonetic", "soundex_full"])
+def test_soundex_block_key_has_no_python_node(spark, kind):
+    """The soundex blocking keys are JVM expressions: as a UDF, soundex ran
+    in one ArrowEvalPython node per consumer of the keyed frame (8 per
+    checkpoint range)."""
+    df = spark.createDataFrame(
+        [("juan", "dela cruz", "cruz juan")], "first_std string, last_std string, sorted_full string"
+    )
+    plan = _formatted_plan(df.select(blocking_key_column(kind)))
+    assert _node_count(plan, "ArrowEvalPython") == 0, plan
+
+
+NORMALIZE_SCHEMAS = {
+    "default": LinkageSchema(id_col="record_id"),
+    "one_geo_no_birthdate": LinkageSchema(
+        id_col="record_id", birthdate=None, geo_fields=["province_name"]
+    ),
+    "no_geo": LinkageSchema(id_col="record_id", geo_fields=[]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(NORMALIZE_SCHEMAS))
+def test_normalize_is_one_python_node(spark, name):
+    """Parse and every standardize cross into Python once per record: one
+    fused UDF, not a parse node feeding a standardize node (and not one
+    copy of the fused UDF per extracted field)."""
+    df = spark.createDataFrame(person_records(n_entities=10, seed=2).drop(columns=["entity_id"]))
+    plan = _formatted_plan(normalize_records(df, NORMALIZE_SCHEMAS[name]))
+    assert _node_count(plan, "ArrowEvalPython") == 1, plan
+
+
+def _two_udf_normalize(df, schema: LinkageSchema):
+    """The parse -> per-field standardize chain the fused UDF replaced."""
+    parsed = df.withColumn(
+        "_parsed",
+        parse_name_udf(F.col(schema.first_name), F.col(schema.middle_name_last_name)),
+    )
+    return parsed.select(
+        F.col(schema.id_col).alias("record_id"),
+        standardize_udf(F.col("_parsed.first_name")).alias("first_std"),
+        standardize_udf(F.col("_parsed.middle_name")).alias("middle_std"),
+        standardize_udf(F.col("_parsed.last_name")).alias("last_std"),
+        *[standardize_udf(F.col(g)).alias(f"{g}_std") for g in schema.geo_fields],
+    )
+
+
+def _value_hash(df):
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).first()
+    return int(row["n"]), row["h"]
+
+
+def test_fused_normalize_equals_two_udf_chain(spark):
+    schema = NORMALIZE_SCHEMAS["default"]
+    df = spark.createDataFrame(person_records(n_entities=300, seed=5).drop(columns=["entity_id"]))
+    want = _two_udf_normalize(df, schema)
+    got = normalize_records(df, schema).select(*want.columns)
+    assert _value_hash(got) == _value_hash(want)
 
 
 def test_hot_census_is_broadcast(spark):
